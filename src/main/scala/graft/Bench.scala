@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: SPARK_GRAFT_REPS passes (default 2) of every SparkEntry
   * query at the sf dir given by SPARK_GRAFT_SF_DIR, reporting the per-query
@@ -28,7 +28,7 @@ object Bench {
 
   // Locale.ROOT: a comma decimal separator (de_DE et al.) would corrupt the
   // JSON line on any machine whose default locale isn't dot-decimal.
-  private def fmt(v: Double): String =
+  private[graft] def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   /** JSON-string-safe sf label: escape quotes/backslashes, drop control
@@ -109,67 +109,44 @@ object Bench {
     line(bySlowest.take(keep), if (rest.isEmpty) None else Some(rest.sum))
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // The bounded top-k aggregate (top_min_pairs) groups by query id —
-      // high cardinality by design. ObjectHashAggregate's default
-      // sort-based fallback fires at 128 in-memory groups and then pays a
-      // per-run serialize/merge of every typed buffer; measured at z320k
-      // it costs q_ann_pq ~4.5 s of 36 (round 12, PLANS.md). The knob is
-      // memory-bounded: threshold × state size is held PER TASK, and a
-      // 2^20 setting OOMed the 8 GiB box at shortlist=200 (≈3.3 KB/group
-      // × ~16k groups/task × 32 tasks) — 8192 keeps the map ≤ ~27 MB/task
-      // at that state size while covering the moderate-cardinality rows.
-      // SCOPE: deliberately SUITE-WIDE, so it also raises the in-memory-
-      // group commitment for every other ObjectHashAggregate here
-      // (collect_list prefix aggregates, hash-image arrays, sketches)
-      // whose per-group state is bigger than top_min_pairs' bounded
-      // buffers. Measured harmless (round 13, ThresholdAB zipf20k
-      // alternating A/B, PLANS.md): the collect-heavy rows read 0.98-1.08×
-      // at 8192 vs 128 — within window noise — and the r12 driver's
-      // q_edit_threshold 12.61 s was exonerated as a window anomaly, not
-      // this knob. Tests and Verify keep the default so the fallback path
-      // stays exercised for correctness.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "8192")
-      // r17 (guide §6 input split size): the default 4 MiB
-      // files.openCostInBytes floors maxSplitBytes at 4 MiB, which for the
-      // ≤11 MiB fixture files caps every scan at ~3 tasks REGARDLESS of
-      // core count — so the scan legs (and everything fused into them)
-      // could not use the cores, and the 8-vs-32-core scaling run measured
-      // ~1.0 on every query. At 512 KiB the split size follows
-      // bytesPerCore = totalBytes/defaultParallelism (scale- and
-      // core-adaptive), so small inputs parallelize and core count shows.
-      // At production file sizes (hundreds of MB+) bytesPerCore and the
-      // 128 MiB maxPartitionBytes dominate and this setting is inert; its
-      // only packing effect (many tiny files per split) is also ~unchanged
-      // since split capacity shrinks with the same constant. Env-overridable
-      // to keep the bench parameterised rather than tuned to one box.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "524288"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM/shuffle/codegen/parquet/broadcast paths once so the first
-    // measured query doesn't absorb session startup (~4s otherwise).
+  /** Runs the query to completion: the one drain that Bench and Probe
+    * time. Returns the row count. `count()` lets Catalyst prune columns no
+    * one reads (ROADMAP item 1 tracks the switch to a `noop` write). */
+  private[graft] def drain(df: DataFrame): Long = df.count()
+
+  /** Per-query hygiene before every timed run. Operators may cache
+    * intermediates (geo dims etc.); clearing them makes each measurement
+    * its own cold plan and stops caches accumulating across the run.
+    * localCheckpoint blocks (pagerank/triangles/tiling) are MEMORY_AND_DISK
+    * and are only reclaimed by the ContextCleaner on a GC — across a
+    * 134-query session they pile up and later queries run under
+    * block-manager pressure (the round-6 q_tfidf/q_speed "regressions" with
+    * untouched code). Drop them eagerly: a finished query's RDDs are never
+    * recomputed, so unpersisting a local checkpoint is safe here. */
+  private[graft] def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  /** Warms the JVM/shuffle/codegen/parquet/broadcast paths once so the
+    * first measured query doesn't absorb session startup (~4s otherwise). */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions.{broadcast, col}
     spark.range(1L << 20).selectExpr("id % 97 AS k")
       .groupBy("k").count().count()
-    locally {
-      import org.apache.spark.sql.functions.{broadcast, col}
-      val c = spark.read.parquet(s"$sfDir/customer.parquet")
-        .select("c_custkey", "c_mktsegment").limit(100)
-      val d = c.select(col("c_custkey").as("k2"))
-      c.join(broadcast(d), c("c_custkey") === d("k2"))
-        .selectExpr("row_number() OVER (PARTITION BY c_mktsegment ORDER BY c_custkey) AS rn")
-        .count()
-    }
+    val c = spark.read.parquet(s"$sfDir/customer.parquet")
+      .select("c_custkey", "c_mktsegment").limit(100)
+    val d = c.select(col("c_custkey").as("k2"))
+    c.join(broadcast(d), c("c_custkey") === d("k2"))
+      .selectExpr("row_number() OVER (PARTITION BY c_mktsegment ORDER BY c_custkey) AS rn")
+      .count()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.build("bench")
+    warmUp(spark, sfDir)
     // Box calibration: one FIXED synthetic workload (sf-independent),
     // timed min-of-2 after warmup and published as `calibration_sec`.
     // Cross-round bench ratios divide by this to separate host-speed
@@ -230,21 +207,9 @@ object Bench {
     // EXCLUDED from the min — a fast failure would otherwise publish as the
     // query's best time and a crash would read as a speedup in the curve
     def runOnce(): Seq[(String, Double, Boolean)] = SparkEntry.queries.toSeq.map { case (name, fn) =>
-      // operators may cache intermediates (geo dims etc.); clear between
-      // queries so each measurement is its own cold plan and caches don't
-      // accumulate across the 134-query run
-      spark.catalog.clearCache()
-      // localCheckpoint blocks (pagerank/triangles/tiling) are MEMORY_AND_
-      // DISK and are only reclaimed by the ContextCleaner on a GC — across
-      // a 134-query session they pile up and later queries run under
-      // block-manager pressure (the round-6 q_tfidf/q_speed "regressions"
-      // with untouched code). Drop them eagerly: the finished query's RDDs
-      // are never recomputed, so unpersisting a local checkpoint is safe
-      // here.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      releaseCaches(spark)
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { drain(fn(spark, sfDir)); true } catch { case _: Throwable => false }
       (name, (System.nanoTime() - t0) / 1e9, ok)
     }
     val runs = (1 to math.max(1, reps)).map(_ => runOnce())
@@ -333,12 +298,10 @@ object Bench {
           .withDefaultValue(Vector.empty)
         zipfSchedule(zipfFamily, zipfReps).foreach { case (name, _) =>
           val fn = SparkEntry.queries(name)
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          releaseCaches(spark)
           val t0 = System.nanoTime()
           try {
-            fn(spark, zipfDir).count()
+            drain(fn(spark, zipfDir))
             runTimes(name) = runTimes(name) :+ (System.nanoTime() - t0) / 1e9
           } catch { case _: Throwable => () }
         }

@@ -98,14 +98,7 @@ object FraudDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse(
       Files.createTempDirectory("graft-fraud-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("verify")
     val (lookup, master) = run(spark, outDir)
     println(s"lookup rows: ${lookup.count()}")
     println(s"master rows: ${master.count()}")

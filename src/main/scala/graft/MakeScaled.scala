@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Scaling-probe data generator: writes a k× blow-up of the sf0.1 fact
@@ -37,14 +37,7 @@ object MakeScaled {
     val cleanCorpus = rest.contains("cleancorpus")
     val src = rest.filterNot(f => f == "corpus" || f == "cleancorpus")
       .headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("bench")
 
     val shift = 1000000000L
     def copies(name: String, idCols: Seq[String]) = {

@@ -137,13 +137,7 @@ object MakeZipf {
     val out = args(0)
     val nDocs = args(1).toLong
     val vocab = if (args.length > 2) args(2).toLong else 50000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("bench")
     if (!graphOnly) generate(spark, out, nDocs, vocab)
     generateGraph(spark, out, nDocs)
     spark.stop()

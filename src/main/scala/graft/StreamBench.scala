@@ -147,15 +147,13 @@ object StreamBench {
     val batches = if (args.length > 2) args(2).toInt else 20
     val copies = if (args.length > 3) args(3).toInt else 1
     val parts = if (args.length > 4) args(4).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the *_tws scenarios run transformWithState, which needs the RocksDB
+    // store on the session (FraudStream.runFrom checks it)
+    val api = if (scenario.endsWith("_tws")) "tws" else "fmgws"
+    val spark = GraftSession.build("bench",
+      Seq("spark.sql.shuffle.partitions" -> parts.toString) ++
+        (if (api == "tws") Seq(GraftSession.StateStoreProviderKey -> GraftSession.RocksDbProvider)
+         else Nil))
     import spark.implicits._
     val work = Files.createTempDirectory("graft-streambench").toString
     val shift = 1000000000L
@@ -254,7 +252,7 @@ object StreamBench {
         // standing per-round stream row.
         snapDedupStats(spark, sfDir, batches, copies, parts)
 
-      case s if s.startsWith("scale_") =>
+      case "scale_fmgws" | "scale_tws" =>
         // past-the-fixture state scale (round-9): the sf0.1 replay tops out
         // at 1,500-6,000 distinct cards, so the "state is linear in keys /
         // RocksDB for past-heap" claims were asserted, not measured. This
@@ -262,7 +260,6 @@ object StreamBench {
         // each, spread round-robin across batches) through the identical
         // production wiring, with a full-coverage deploy snapshot — the
         // 1M-card point is `scale_fmgws ... 20 1000 8`.
-        val api = if (s.endsWith("tws")) "tws" else "fmgws"
         val cards = (if (args.length > 3) args(3).toLong else 1000L) * 1000L
         val txnsPer = 3L
         val txnJson = spark.range(cards * txnsPer).select(to_json(struct(
@@ -394,8 +391,7 @@ object StreamBench {
         run("warm", batches / 2) // warm-up: big files, few batches
         run("main", 1)
 
-      case api0 =>
-        val api = if (api0 == "fraud_tws") "tws" else "fmgws"
+      case "fraud_fmgws" | "fraud_tws" =>
         // events → transaction JSON lines: same mapping as
         // q_stateful_classify (Stateful.scala) — user=card, value=amount,
         // payload k=postcode, day-first stream timestamp
@@ -446,6 +442,8 @@ object StreamBench {
         }
         run("warm", batches / 2)
         run("main", 1)
+
+      case other => throw new IllegalArgumentException(s"unknown scenario '$other'")
     }
     spark.stop()
     println(s"STREAMBENCH ${line.json}")

@@ -483,7 +483,7 @@ object Graph {
     // cold pair mass takes the bare self-join + count — no degree-flag join,
     // no per-entity hash-image arrays, no empty-hot prefix/candB/hotShared
     // machinery. On the near-uniform sf fixtures that machinery was pure
-    // overhead: the r16 PathAB probe read prefilter 3.61/3.00 s vs plain
+    // overhead: r16 measured prefilter 3.61/3.00 s vs plain
     // 2.81/2.41 s (m=3/m=4, sf0.1, min-of-3) with ZERO hub items to route,
     // while on zipf20k (max degree 5681, hot mass 34.4M pairs) prefilter
     // keeps its 6-10x win (5.51 vs 31.97 s) — so the choice must be
@@ -507,10 +507,12 @@ object Graph {
       // the spark.-prefixed spelling reaches the session from -D system
       // properties / spark-submit --conf, which only forward spark.* keys
       .orElse(cp.sparkSession.conf.getOption("spark.graft.copurchase.forcePath"))
-      .filter(Seq("salted", "prefilter", "plain").contains(_))
-    val (path, degForFlag) =
-      if (hubPath != "auto") (hubPath, None)
-      else if (forced.isDefined) (forced.get, None)
+    // a typo'd arm must not silently measure the auto route
+    forced.foreach(f => require(Seq("auto", "salted", "prefilter", "plain").contains(f),
+      s"graft.copurchase.forcePath must be auto|salted|prefilter|plain, got $f"))
+    val path =
+      if (hubPath != "auto") hubPath
+      else if (forced.exists(_ != "auto")) forced.get
       else {
         val plainMax = cp.sparkSession.conf.getOption(
           "graft.copurchase.plainColdMax").map(_.toLong).getOrElse(1L << 26)
@@ -529,11 +531,9 @@ object Graph {
               expr("__d * (__d - 1) DIV 2")).otherwise(lit(0L))).as("cm")).head()
         val maxd = if (st.isNullAt(0)) 0L else st.getLong(0)
         val coldMass = if (st.isNullAt(1)) 0L else st.getLong(1)
-        val p0 =
-          if (maxd <= hotDegree && coldMass <= plainMax) "plain"
-          else if (minShared >= 2) "prefilter"
-          else "salted"
-        (p0, None)
+        if (maxd <= hotDegree && coldMass <= plainMax) "plain"
+        else if (minShared >= 2) "prefilter"
+        else "salted"
       }
     if (path == "plain") {
       // hub-free: every item's fan-out is <= hotDegree, so the plain
@@ -546,8 +546,7 @@ object Graph {
         .filter(col("shared") >= minShared)
         .select(col("src"), col("dst"), col("shared").as("w"))
     }
-    val flagged = cp.join(degForFlag.getOrElse(
-      cp.groupBy("p").agg(count(lit(1)).as("__d"))), Seq("p"))
+    val flagged = cp.join(cp.groupBy("p").agg(count(lit(1)).as("__d")), Seq("p"))
     val cold = flagged.filter(col("__d") <= hotDegree).select("c", "p")
     val hot = flagged.filter(col("__d") > hotDegree).select("c", "p")
     if (path == "prefilter") prefilterEdges(cold, hot, minShared)
@@ -966,7 +965,7 @@ object Graph {
     // both directions in ONE pass over e (r17): the union-of-two-selects
     // shape evaluated the caller's edge derivation twice while BUILDING
     // the checkpoint — for the copurchase riders that is the full
-    // pair-count aggregate re-run per leg (StageProbe: a 169.8 MB double
+    // pair-count aggregate re-run per leg (measured: a 169.8 MB double
     // read of the 84.9 MB pair exchange, ~13-15 s of task CPU at sf0.1)
     val bi = e.select(explode(array(
         struct(col("x").as("u"), col("y").as("v")),
@@ -1871,7 +1870,7 @@ object Graph {
     * node with an edge.
     *
     * `localCutoff` = 2^23 is MEASURED, not a time crossover (round 16,
-    * KcoreProbe `serial` arm, quadratic-skew synth, maxK 8, same-session
+    * serial arm, quadratic-skew synth, maxK 8, same-session
     * A/Bs with 0 disagreement rows): serial beat the distributed fixpoint
     * 18.3 vs 97.6 s at 2M edges and 24.6 vs 114.3 s at 8M — the fixpoint
     * is round-barrier-bound at any size one task can hold, so no time
@@ -2062,7 +2061,7 @@ object Graph {
 
   /** The superseded distributed form — maxK−1 iterated [[kCore]] peels
     * over the pinned edge set — kept ONLY as the baseline arm of the
-    * design-scale A/B (see KcoreProbe's coreness mode): O(maxK)
+    * design-scale A/B: O(maxK)
     * sequential full peels where [[hIndexCoreness]] runs one fixpoint.
     */
   private[graft] def corenessIterated(edges: DataFrame, maxK: Int,
@@ -2728,8 +2727,8 @@ object Graph {
         // query re-joins the checkpointed edge frame six times, and the
         // plain path's edge checkpoint comes out of the wide pair-count
         // exchange with ~2x the partitions — the six relaxation rounds
-        // then run as fleets of near-empty tasks. A/B at sf0.1 (QProbe
-        // min-of-4, same session): prefilter 4.74 s vs auto/plain 5.19 s,
+        // then run as fleets of near-empty tasks. A/B at sf0.1 (min-of-4,
+        // same session): prefilter 4.74 s vs auto/plain 5.19 s,
         // the one copurchase rider where the downstream shape outweighs
         // the cheaper build; prefilter is also the correct arm on skewed
         // fixtures, so pinning loses nothing at scale.

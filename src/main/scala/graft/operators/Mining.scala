@@ -45,7 +45,7 @@ object Mining {
     * audit showed the scan → distinct → semi-join chain duplicated under
     * both join legs, one of them as a 600k-row broadcast); the array form
     * builds baskets once and emits exactly the i1 < i2 pairs with no
-    * join. MiningProbe A/B at sf0.1: 2.35 -> 1.87 s (min-of-3), pair
+    * join. A/B at sf0.1: 2.35 -> 1.87 s (min-of-3), pair
     * sets EQUAL. Scale shape is unchanged — per-basket state and pair
     * fan-out stay bounded by basket width (≤ ~7 lines per order here,
     * order width generally), and the Apriori semi-join still prunes the

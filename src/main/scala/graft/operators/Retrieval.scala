@@ -65,7 +65,7 @@ object Retrieval {
     * posting-list contract. On a corpus where common terms appear in most
     * documents, those terms contribute near-zero idf but almost all of the
     * candidate mass (the 32× twin-fixture probe: 82 s vs 13.5 s with
-    * per-copy vocabularies, RetrievalProbe). Setting `maxDfFrac=f` prunes
+    * per-copy vocabularies). Setting `maxDfFrac=f` prunes
     * query terms with df > f·n_docs BEFORE the posting fan-out — standard
     * stop-word/static pruning.
     *

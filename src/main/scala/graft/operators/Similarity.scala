@@ -848,7 +848,7 @@ object Similarity {
     * quantize the UNIT vector instead of the raw one. ADC approximates
     * L2, and on unit vectors L2 ranking IS cosine ranking (d² = 2−2cos,
     * monotone) — without it, PQ against a cosine ground truth measures
-    * metric mismatch as much as quantization loss (RecallProbe z5k:
+    * metric mismatch as much as quantization loss (measured at z5k:
     * recall@10 0.12 raw). The registered oracle rows keep
     * normalize=false so the DuckDB replays stay on the established
     * exact-integer quantization; the production/recall paths opt in.
@@ -1029,7 +1029,7 @@ object Similarity {
     *   3. keeps a `shortlist` per query by ADC and reranks it with the
     *      EXACT integer cosine of the true quantized vectors — so the
     *      output ranking is exact over whatever the index retrieved,
-    *      and recall is purely a retrieval property (RecallProbe).
+    *      and recall is purely a retrieval property (pinned by RecallSpec).
     *
     * At 100 TB: training collects only the bounded mean tables, the
     * corpus shuffles as (cell, 8 codes) rows, candidate mass is

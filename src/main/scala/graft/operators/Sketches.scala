@@ -184,7 +184,7 @@ object Sketches {
       (s, dir) => {
         // fanOut: the sketch build folds depth=4 md5 buckets per row inside
         // the scan stage — single-task on a one-row-group file. A/B r16:
-        // 2.86 -> 1.68 s at sf0.1 (QProbe min-of-3); no-op on multi-split
+        // 2.86 -> 1.68 s at sf0.1 (min-of-3); no-op on multi-split
         // inputs.
         val li = Tables.fanOut(s, dir, "lineitem")
         val sk = countMin(li, "l_partkey", depth = 4, width = 256)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession
 import graft.functions.GeoFunctions
 import graft.model._
 import graft.rules.Rules
@@ -267,10 +268,18 @@ object FraudStream {
     val spark = raw.sparkSession
     val labeled = stateApi match {
       case "tws" =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        // the state store is a session-wide choice: whoever builds the
+        // session sets it (GraftSession's job profile for GRAFT_STATE_API=
+        // tws), so a tws stream never changes the store of later streams.
+        // Spark's own failure on another store does not name the conf.
+        val provider = spark.conf.getOption(GraftSession.StateStoreProviderKey)
+        require(provider.contains(GraftSession.RocksDbProvider),
+          s"stateApi=tws needs ${GraftSession.StateStoreProviderKey}=" +
+            s"${GraftSession.RocksDbProvider} on the session, got ${provider.getOrElse("none")}")
         FraudStreamTws.classify(decode(raw), lookupSnapshot, zipBc, cfg)
-      case _ => classify(decode(raw), lookupSnapshot, zipBc, cfg)
+      case "fmgws" => classify(decode(raw), lookupSnapshot, zipBc, cfg)
+      case other => throw new IllegalArgumentException(
+        s"unknown stateApi '$other' (expected fmgws|tws)")
     }
     labeled
       .writeStream

@@ -100,10 +100,11 @@ class FileStreamSpec extends SparkSuite {
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.StringType))))
       .text(inDir)
-    // runFrom("tws") sets the state-store provider on the SHARED session;
-    // restore it so later streaming suites still pin the default provider
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    // the tws path needs the RocksDB store, which whoever owns the session
+    // sets; restore it so later streaming suites keep the default provider
+    val providerKey = GraftSession.StateStoreProviderKey
     val prevProvider = spark.conf.getOption(providerKey)
+    spark.conf.set(providerKey, GraftSession.RocksDbProvider)
     val q = FraudStream.runFrom(raw, snapshot, zipBc,
         masterPath = s"$dir/master", checkpoint = s"$dir/ckpt", stateApi = "tws")
       .start()
@@ -123,6 +124,42 @@ class FileStreamSpec extends SparkSuite {
         case Some(p) => spark.conf.set(providerKey, p)
         case None => spark.conf.unset(providerKey)
       }
+    }
+  }
+
+  test("runFrom leaves the session conf alone and rejects an unknown stateApi") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-runfrom-conf").toString
+    val zipBc = spark.sparkContext.broadcast(Map("11111" -> (0.0, 0.0)))
+    val snapshot = Seq(CardLookup(1L, Some(1000.0), Some(700), None, None)).toDS()
+    val raw = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("value",
+          org.apache.spark.sql.types.StringType))))
+      .text(dir)
+    def runFrom(api: String) = FraudStream.runFrom(raw, snapshot, zipBc,
+      masterPath = s"$dir/master", checkpoint = s"$dir/ckpt", stateApi = api)
+    val key = GraftSession.StateStoreProviderKey
+    val prev = spark.conf.getOption(key)
+    try {
+      // without the RocksDB store, tws fails fast naming the conf to set
+      spark.conf.unset(key)
+      val unset = spark.conf.getAll
+      val e = intercept[IllegalArgumentException](runFrom("tws"))
+      assert(e.getMessage.contains(key))
+      assert(spark.conf.getAll == unset)
+      // with it, building the tws writer writes nothing into the session
+      spark.conf.set(key, GraftSession.RocksDbProvider)
+      val before = spark.conf.getAll
+      runFrom("tws")
+      assert(spark.conf.getAll == before)
+      // a typo'd state API is an error, not a silent fmgws run
+      val t = intercept[IllegalArgumentException](runFrom("twz"))
+      assert(t.getMessage.contains("twz"))
+    } finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
     }
   }
 }

@@ -139,6 +139,20 @@ class SkewGraphSpec extends SparkSuite {
       Graph.copurchaseEdges(cp, 2, hubPath = "bogus"))
   }
 
+  test("copurchaseEdges: rejects an unknown graft.copurchase.forcePath") {
+    val s = spark
+    import s.implicits._
+    val cp = Seq((1L, 10L), (2L, 10L), (1L, 11L), (2L, 11L), (3L, 11L)).toDF("c", "p")
+    val key = "graft.copurchase.forcePath"
+    try {
+      spark.conf.set(key, "prefliter")
+      val e = intercept[IllegalArgumentException](Graph.copurchaseEdges(cp, 2))
+      assert(e.getMessage.contains("prefliter") && e.getMessage.contains("prefilter"))
+      spark.conf.set(key, "prefilter")
+      assert(Graph.copurchaseEdges(cp, 2).as[(Long, Long)].collect().toSeq == Seq((1L, 2L)))
+    } finally spark.conf.unset(key)
+  }
+
   test("zOrderKey: exact bit interleave on known values") {
     val s = spark
     import s.implicits._

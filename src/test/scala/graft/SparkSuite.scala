@@ -3,20 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session — one per suite (lazy), UTC, small shuffle count. */
+/** Shared local session — one per suite (lazy), on the `test` profile. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  lazy val spark: SparkSession = GraftSession.build("test", Seq(
     // unique per JVM: test groups fork in parallel (build.sbt testGrouping),
     // and two sessions sharing a managed-table root would race
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 
   def sf(name: String): String = s"/root/testdata/$name"
 }

@@ -1,6 +1,7 @@
 #!/bin/bash
 # Launch a graft main directly on the sbt-compiled classes (no sbt lock).
-# Usage: runmain.sh [-Xmx<size>] graft.Main args...
+# Usage: runmain.sh [-Xmx<size>] graft.Probe <time|stages|explain|ab> <sfDir> <reps> <q1,q2,..> [k=v ...]
+#        (or any other graft main: runmain.sh graft.Verify <sfDir> <outDir>)
 MEM="-Xmx${SPARK_DRIVER_MEM:-8g}"
 if [[ "$1" == -Xmx* ]]; then MEM="$1"; shift; fi
 OPENS=""
