@@ -49,6 +49,9 @@ object Tables {
     else fixed
   }
 
+  /** The most partitions [[fanOut]] spreads one file across. */
+  private val FanOutMax = 64
+
   /** r16 optimization (guide §2.5 "input skew ... otherwise repartition
     * immediately after the read"): [[apply]] with a round-robin fan-out for
     * queries whose SCAN STAGE carries heavy fused per-row work (hash folds,
@@ -71,9 +74,8 @@ object Tables {
     * per part file) smaller than spark.sql.files.maxPartitionBytes (past
     * that the writer emits multiple row groups and the scan parallelizes
     * naturally — so at production scale this is a no-op). The target
-    * follows the session's parallelism, capped (conf graft.scan.fanOutMax,
-    * default 64) so a large cluster doesn't shred a sub-128 MB file into
-    * thousands of empty tasks.
+    * follows the session's parallelism, capped at [[FanOutMax]] so a large
+    * cluster doesn't shred a sub-128 MB file into thousands of empty tasks.
     */
   def fanOut(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = apply(spark, dir, name)
@@ -82,7 +84,6 @@ object Tables {
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     if (f.length >= maxSplit) return df
-    val cap = spark.conf.getOption("graft.scan.fanOutMax").map(_.toInt).getOrElse(64)
-    df.repartition(math.max(2, math.min(spark.sparkContext.defaultParallelism, cap)))
+    df.repartition(math.max(2, math.min(spark.sparkContext.defaultParallelism, FanOutMax)))
   }
 }

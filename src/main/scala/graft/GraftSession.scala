@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   *    the master and the deployer's confs
   *
   * Env vars read: SPARK_GRAFT_CPUS (bench/verify task slots and shuffle
-  * partitions), SPARK_GRAFT_AQE and SPARK_GRAFT_OPEN_COST (bench), and
-  * GRAFT_STATE_API (job).
+  * partitions), SPARK_GRAFT_OPEN_COST (bench) and GRAFT_STATE_API (job).
+  * Overrides may set only the `graft.` keys [[GraftConf]] declares.
   */
 object GraftSession {
 
@@ -29,18 +29,19 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.extensions" -> "graft.functions.GraftExtensions")
 
-  /** A local session: `cpus` task slots and as many shuffle partitions. */
-  private def local(cpus: String) = Seq(
-    "spark.master" -> s"local[$cpus]",
-    "spark.sql.shuffle.partitions" -> cpus)
+  /** A local session of SPARK_GRAFT_CPUS task slots (else `cpus`) and as
+    * many shuffle partitions. */
+  private def local(env: Map[String, String], cpus: Int) = {
+    val n = positive(env, "SPARK_GRAFT_CPUS", cpus, "task slots", Int.MaxValue)
+    Seq("spark.master" -> s"local[$n]", "spark.sql.shuffle.partitions" -> n)
+  }
 
   private val noUi = Seq("spark.ui.enabled" -> "false")
 
   def confs(profile: String, env: Map[String, String] = sys.env): Seq[(String, String)] =
     profile match {
       case "bench" =>
-        local(env.getOrElse("SPARK_GRAFT_CPUS", "32")) ++ Seq(
-          "spark.sql.adaptive.enabled" -> env.getOrElse("SPARK_GRAFT_AQE", "true")) ++
+        local(env, 32) ++ Seq("spark.sql.adaptive.enabled" -> "true") ++
           common ++ Seq(
           // The bounded top-k aggregate (top_min_pairs) groups by query id —
           // high cardinality by design. ObjectHashAggregate's default
@@ -76,11 +77,12 @@ object GraftSession {
           // ~unchanged since split capacity shrinks with the same constant.
           // Env-overridable to keep the bench parameterised rather than
           // tuned to one box.
-          "spark.sql.files.openCostInBytes" -> openCost(env)) ++ noUi
+          "spark.sql.files.openCostInBytes" ->
+            positive(env, "SPARK_GRAFT_OPEN_COST", 524288, "bytes")) ++ noUi
       case "verify" =>
-        local(env.getOrElse("SPARK_GRAFT_CPUS", "4")) ++ common ++ noUi
+        local(env, 4) ++ common ++ noUi
       case "test" =>
-        local("4") ++ common ++ noUi
+        local(Map.empty, 4) ++ common ++ noUi
       case "job" =>
         // transformWithState needs the RocksDB store, and the provider is a
         // session-wide choice, so it is made here rather than by the stream
@@ -92,19 +94,19 @@ object GraftSession {
           s"unknown session profile '$other' (expected bench|verify|test|job)")
     }
 
-  /** SPARK_GRAFT_OPEN_COST as a positive byte count (default 512 KiB):
-    * Spark's own parse error would not name the variable. */
-  private def openCost(env: Map[String, String]): String =
-    env.get("SPARK_GRAFT_OPEN_COST").fold("524288") { v =>
-      v.trim.toLongOption.filter(_ > 0).map(_.toString).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_OPEN_COST must be a positive number of bytes, got '$v'"))
-    }
+  /** Env var `name` as a positive count of `unit` up to `max`, else
+    * `default`: Spark's own parse error would not name the variable. */
+  private def positive(env: Map[String, String], name: String, default: Long,
+      unit: String, max: Long = Long.MaxValue): String =
+    env.get(name).fold(default)(v => GraftConf.parse(name, s"a positive number of $unit", v)(
+      _.toLongOption.filter(n => n > 0 && n <= max))).toString
 
   /** Builds (or returns the running) session of `profile`; `overrides` are
-    * applied after the profile's confs. The bench and verify tools log at
-    * WARN so their stdout payload stays readable. */
+    * applied after the profile's confs, and a bad `graft.` one fails before
+    * any session starts ([[GraftConf.check]]). The bench and verify tools
+    * log at WARN so their stdout payload stays readable. */
   def build(profile: String, overrides: Seq[(String, String)] = Nil): SparkSession = {
+    overrides.foreach { case (k, v) => GraftConf.check(k, v) }
     val b = (confs(profile) ++ overrides).foldLeft(
       SparkSession.builder().appName(s"graft-$profile")) { case (b, (k, v)) => b.config(k, v) }
     // spark-submit provides spark.master; direct runs of a job use every core

@@ -23,11 +23,13 @@ import scala.util.control.NonFatal
   *    arm b. Each rep runs both arms, alternating which goes first; both
   *    arms' times and row counts are printed, and the session conf is
   *    restored afterwards. E.g. `ab dir 3 q_triangles
-  *    graft.copurchase.forcePath=plain vs graft.copurchase.forcePath=prefilter`.
+  *    spark.graft.copurchase.forcePath=plain vs
+  *    spark.graft.copurchase.forcePath=prefilter`.
   *
   * In the other modes the `k=v` confs are set on the session before the
-  * first query. A failing query prints its exception in an `"error"` field
-  * and the probe exits 1 after the rest have run.
+  * first query; a `graft.` conf must be a [[GraftConf]] knob with a value it
+  * accepts. A failing query prints its exception in an `"error"` field and
+  * the probe exits 1 after the rest have run.
   */
 object Probe {
 
@@ -36,7 +38,7 @@ object Probe {
       "(ab: [a confs] vs [b confs])"
 
   private def conf(arg: String): (String, String) = arg.split("=", 2) match {
-    case Array(k, v) if k.nonEmpty => k -> v
+    case Array(k, v) if k.nonEmpty => GraftConf.check(k, v); k -> v
     case _ => throw new IllegalArgumentException(s"expected k=v, got '$arg'; $usage")
   }
 
@@ -127,7 +129,12 @@ object Probe {
     arm.map { case (k, v) => s"${str(k)}:${str(v)}" }.mkString("""{"conf":{""", ",", "},") +
       timed(reps) + "}"
 
-  def main(args: Array[String]): Unit = {
+  /** A bad argument or conf prints one `"error"` line and exits 1. */
+  def main(args: Array[String]): Unit = try run(args) catch {
+    case e: IllegalArgumentException => println(s"""{"error":${str(e.getMessage)}}"""); sys.exit(1)
+  }
+
+  private def run(args: Array[String]): Unit = {
     require(args.length >= 4, usage)
     val Array(mode, sfDir, repsArg, queryArg) = args.take(4)
     require(Seq("time", "stages", "explain", "ab").contains(mode), s"unknown mode '$mode'; $usage")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftConf, GraftQuery, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -463,6 +463,9 @@ object Graph {
     copurchaseWeightedEdges(cp, minShared, hotDegree, salts, hubPath)
       .select("src", "dst")
 
+  /** Cold pair mass up to which the auto route takes the plain path. */
+  private val PlainColdMax = 1L << 26
+
   /** [[copurchaseEdges]] keeping the exact shared-item count as the edge
     * weight `w` — same hub-safe candidate generation (both paths already
     * compute the exact count to apply the minShared floor; this variant
@@ -487,8 +490,8 @@ object Graph {
     // 2.81/2.41 s (m=3/m=4, sf0.1, min-of-3) with ZERO hub items to route,
     // while on zipf20k (max degree 5681, hot mass 34.4M pairs) prefilter
     // keeps its 6-10x win (5.51 vs 31.97 s) — so the choice must be
-    // data-derived, not static. The mass bound (conf
-    // graft.copurchase.plainColdMax, default 2^26) guards the plain path's
+    // data-derived, not static. The mass bound
+    // (PlainColdMax, 2^26 pairs) guards the plain path's
     // pair EXCHANGE on dense-but-hub-free inputs: maxd <= hotDegree already
     // bounds any single join key's output at hotDegree^2/2 pairs, so the
     // only remaining risk is total exchange mass, which at 2^26 pairs x
@@ -498,24 +501,14 @@ object Graph {
     // Results are path-identical (SkewGraphSpec pins plain/salted/prefilter
     // pairwise on fixed + randomized fixtures; the q_triangles oracle pins
     // the auto route end-to-end).
-    // Session override for the auto route (r17): `graft.copurchase.forcePath`
-    // pins every auto caller to one arm without touching call sites — the
-    // A/B hook for rider-level measurements, and the production escape hatch
-    // when the operator's data probe is known-wrong for a workload. Explicit
-    // hubPath arguments (q_critical_path's prefilter pin) stay pinned.
-    val forced = cp.sparkSession.conf.getOption("graft.copurchase.forcePath")
-      // the spark.-prefixed spelling reaches the session from -D system
-      // properties / spark-submit --conf, which only forward spark.* keys
-      .orElse(cp.sparkSession.conf.getOption("spark.graft.copurchase.forcePath"))
-    // a typo'd arm must not silently measure the auto route
-    forced.foreach(f => require(Seq("auto", "salted", "prefilter", "plain").contains(f),
-      s"graft.copurchase.forcePath must be auto|salted|prefilter|plain, got $f"))
+    // GraftConf.ForcePath pins every auto caller to one arm: the A/B hook,
+    // and the escape hatch when the data probe is known-wrong for a
+    // workload. Explicit hubPath arguments (q_critical_path's) stay pinned.
+    val forced = GraftConf.ForcePath.get(cp.sparkSession)
     val path =
       if (hubPath != "auto") hubPath
-      else if (forced.exists(_ != "auto")) forced.get
+      else if (forced != "auto") forced
       else {
-        val plainMax = cp.sparkSession.conf.getOption(
-          "graft.copurchase.plainColdMax").map(_.toLong).getOrElse(1L << 26)
         // r17: the probe is ONE aggregate job, no localCheckpoint — the
         // r16 shape checkpointed the full degree frame before the 1-row
         // stats agg so the hub arms could reuse it, but the common
@@ -531,7 +524,7 @@ object Graph {
               expr("__d * (__d - 1) DIV 2")).otherwise(lit(0L))).as("cm")).head()
         val maxd = if (st.isNullAt(0)) 0L else st.getLong(0)
         val coldMass = if (st.isNullAt(1)) 0L else st.getLong(1)
-        if (maxd <= hotDegree && coldMass <= plainMax) "plain"
+        if (maxd <= hotDegree && coldMass <= PlainColdMax) "plain"
         else if (minShared >= 2) "prefilter"
         else "salted"
       }
@@ -1940,14 +1933,12 @@ object Graph {
     */
   private[graft] def hIndexCoreness(und: DataFrame, maxK: Int,
       maxRounds: Int = 10000, foldEvery: Int = 8): DataFrame = {
-    val spark = und.sparkSession
     val adj = und.select(col("a").as("u"), col("b").as("v"))
       .union(und.select(col("b").as("u"), col("a").as("v")))
       .localCheckpoint(false)
     val kCols = (1 to maxK).map(k => s"k$k")
     val hExpr = greatest((1 to maxK).map(k =>
       when(col(s"k$k") >= k, k).otherwise(0)): _*)
-    val trace = sys.env.contains("GRAFT_CORENESS_TRACE")
     // initial estimates est₀ = min(deg, maxK), then initial counts from
     // one full gather — the only graph-sized shuffle pass in the run
     val est0 = adj.groupBy(col("u").as("node"))
@@ -1990,7 +1981,6 @@ object Graph {
     var round = 0
     while (chgCnt > 0) {
       round += 1
-      val tRound = System.nanoTime()
       require(round <= maxRounds, s"h-index coreness did not converge in $maxRounds rounds")
       // deltas: a neighbor of a dropped node decrements cnt_k for
       // new < k ≤ old; one adjacency scan, message volume = Σ deg(chg)
@@ -2042,20 +2032,10 @@ object Graph {
         // block-manager pressure that makes every later round slower
         // (the round-6 bench finding, inside one query). The vars above
         // dropped the references; one GC per fold lets the
-        // ContextCleaner actually release the blocks. A full GC is
-        // driver-wide, so a session sharing the JVM with concurrent
-        // queries can opt out (ADVICE r15): the blocks then drain on the
-        // JVM's own GC schedule instead, trading reclaim latency for no
-        // stop-the-world pauses on neighbors.
-        if (spark.conf.get("graft.hindex.gcPerFold", "true").toBoolean)
-          System.gc()
+        // ContextCleaner actually release the blocks.
+        System.gc()
       }
-      if (trace)
-        System.err.println(f"[hindex] round $round frontier=$chgCnt" +
-          f" touched=$decsCnt ${(System.nanoTime() - tRound) / 1e9}%.2fs" +
-          s" statDigits=${overlay.queryExecution.optimizedPlan.stats.sizeInBytes.toString.length}")
     }
-    if (trace) System.err.println(s"[hindex] converged in $round rounds")
     cur.select(col("node"), col("est").as("coreness"))
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftConf, GraftQuery, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -74,6 +74,26 @@ object Similarity {
       maxTile: Long = MaxTileRows,
   ): DataFrame = tiledPairScan2(prepared, prepared, kernel, maxTile)
 
+  /** A tiled scan's corpus frame, pinned once. Lazy localCheckpoint, NOT
+    * Dataset.persist: persist registers the frame in the session
+    * CacheManager and leaks cached blocks until an explicit
+    * unpersist/clearCache (the operator returns lazily, so there is no
+    * unpersist-after-use point inside it). A localCheckpoint caches at the
+    * RDD layer (MEMORY_AND_DISK, spill-safe, computed once on the first
+    * action) and the ContextCleaner frees the blocks as soon as the caller
+    * drops the returned frame — no session-lifetime leak. Cost: lineage is
+    * truncated, so on a real cluster losing an executor's blocks fails the
+    * job instead of recomputing (same trade [[Dedup.clusterPairs]] makes
+    * for its iteration frames). Deployments with dynamic allocation /
+    * preemptible executors, where block loss is routine rather than
+    * exceptional, set GraftConf.Materialize to persist to keep full
+    * lineage instead — accepting that the caller must unpersist (or
+    * clearCache) after consuming the result. */
+  private def materialized(df: DataFrame): DataFrame =
+    if (GraftConf.Materialize.get(df.sparkSession) == "persist")
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else df.localCheckpoint(false)
+
   /** Two-sided form: the query frame and the corpus frame may differ (e.g.
     * multi-probe LSH replicates each query row to several buckets while the
     * corpus keeps one bucket per row). Tile counts come from the CORPUS
@@ -90,28 +110,10 @@ object Similarity {
     import s.implicits._
     // The CORPUS frame feeds three subplans (size aggregate, query side,
     // corpus side); without materialization the quantization — and for the
-    // LSH paths the 8×Dim primitive plane-dot map — would run 3×. Lazy
-    // localCheckpoint, NOT Dataset.persist: persist registers the frame in
-    // the session CacheManager and leaks cached blocks until an explicit
-    // unpersist/clearCache (the operator returns lazily, so there is no
-    // unpersist-after-use point inside it). A localCheckpoint caches at the
-    // RDD layer (MEMORY_AND_DISK, spill-safe, computed once on the first
-    // action) and the ContextCleaner frees the blocks as soon as the
-    // caller drops the returned frame — no session-lifetime leak. Cost:
-    // lineage is truncated, so on a real cluster losing an executor's
-    // blocks fails the job instead of recomputing (same trade
-    // [[Dedup.clusterPairs]] makes for its iteration frames). Deployments
-    // with dynamic allocation / preemptible executors, where block loss is
-    // routine rather than exceptional, set spark.graft.materialize=persist
-    // to keep full lineage instead — accepting that the caller must
-    // unpersist (or clearCache) after consuming the result.
+    // LSH paths the 8×Dim primitive plane-dot map — would run 3×.
     // A distinct query frame feeds exactly ONE subplan — materializing it
     // would be pure write overhead.
-    val cP = s.conf.getOption("spark.graft.materialize") match {
-      case Some("persist") =>
-        cPrepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case _ => cPrepared.localCheckpoint(false)
-    }
+    val cP = materialized(cPrepared)
     val qP = if (qPrepared eq cPrepared) cP else qPrepared
     val sizes = cP.groupBy("__bucket").agg(count(lit(1)).as("__n"))
     def sized(df: DataFrame) = df.join(sizes, "__bucket")
@@ -687,9 +689,8 @@ object Similarity {
     * materializes as two aligned primitive arrays — 16 bytes/row instead
     * of a Tuple3 with a boxed 8-long array (~120 bytes) — and the shuffle
     * that replicates corpus rows across query tiles shrinks the same 7×.
-    * Same tiling algebra, same corpus-side size join, same
-    * materialization policy (localCheckpoint, or persist under
-    * spark.graft.materialize=persist) as the generic scaffold. */
+    * Same tiling algebra, corpus-side size join and [[materialized]]
+    * corpus as the generic scaffold. */
   private def tiledAdcScanPacked(
       qPrepared: DataFrame, // (__bucket, __id, q: array<long>)
       cPacked: DataFrame,   // (__bucket, __id, pk: long)
@@ -698,11 +699,7 @@ object Similarity {
   ): DataFrame = {
     val s = cPacked.sparkSession
     import s.implicits._
-    val cP = s.conf.getOption("spark.graft.materialize") match {
-      case Some("persist") =>
-        cPacked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case _ => cPacked.localCheckpoint(false)
-    }
+    val cP = materialized(cPacked)
     val sizes = cP.groupBy("__bucket").agg(count(lit(1)).as("__n"))
     val qSide = qPrepared.join(sizes, "__bucket")
       .select(col("__bucket"), col("__id"), col("q"), col("__n"))

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.GraftConf
 import org.apache.spark.SparkException
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -92,7 +93,7 @@ object IntervalJoinStrategy extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Join(left, right, Inner, Some(cond), hint)
-        if SQLConf.get.getConfString("spark.graft.intervalJoin.enabled", "true") == "true" &&
+        if GraftConf.IntervalJoinEnabled.get(SQLConf.get) &&
           !hintConflicts(hint) &&
           (rightBroadcastHinted(hint) ||
             (right.stats.sizeInBytes >= 0 &&
@@ -156,15 +157,13 @@ case class BroadcastIntervalJoinExec(
     // caps convert the survivable over-budget case into a diagnosable
     // error with a named escape hatch, they are not a hard memory bound.
     val rightRows = right.executeCollect()
-    val maxRows = SQLConf.get.getConfString(
-      "spark.graft.intervalJoin.maxBroadcastRows", "512000000").toLong
+    val maxRows = GraftConf.MaxBroadcastRows.get(SQLConf.get)
     if (rightRows.length >= maxRows)
       throw new SparkException(
         s"BroadcastIntervalJoinExec: cannot broadcast ${rightRows.length} interval rows " +
           s"(cap $maxRows). The planner's size estimate was wrong; disable with " +
-          "spark.graft.intervalJoin.enabled=false to fall back to Spark's join planning.")
-    val maxBytes = SQLConf.get.getConfString(
-      "spark.graft.intervalJoin.maxBroadcastBytes", (8L << 30).toString).toLong
+          s"${GraftConf.IntervalJoinEnabled.key}=false to fall back to Spark's join planning.")
+    val maxBytes = GraftConf.MaxBroadcastBytes.get(SQLConf.get)
     var estBytes = 0L
     var ri = 0
     while (ri < rightRows.length) {
@@ -176,7 +175,7 @@ case class BroadcastIntervalJoinExec(
         throw new SparkException(
           s"BroadcastIntervalJoinExec: broadcast side exceeds $maxBytes bytes " +
             s"(at row $ri of ${rightRows.length}). Disable with " +
-            "spark.graft.intervalJoin.enabled=false to fall back to Spark's join planning.")
+            s"${GraftConf.IntervalJoinEnabled.key}=false to fall back to Spark's join planning.")
       ri += 1
     }
     val collected = rightRows.flatMap { r =>

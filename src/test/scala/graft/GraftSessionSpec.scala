@@ -35,11 +35,13 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.ui.enabled" -> "false"))
   }
 
-  test("a bad SPARK_GRAFT_OPEN_COST fails with a message naming the variable") {
-    for (bad <- Seq("512k", "0", "-1", "")) {
-      val e = intercept[IllegalArgumentException](
-        GraftSession.confs("bench", Map("SPARK_GRAFT_OPEN_COST" -> bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_OPEN_COST"), bad)
+  test("a bad SPARK_GRAFT_OPEN_COST or SPARK_GRAFT_CPUS fails with a message naming it") {
+    val bad = Seq("512k", "0", "-1", "").map("bench" -> "SPARK_GRAFT_OPEN_COST" -> _) ++
+      Seq("4x", "*", "0", "-2", "", "2147483648").flatMap(v =>
+        Seq("bench", "verify").map(_ -> "SPARK_GRAFT_CPUS" -> v))
+    for (((profile, name), v) <- bad) {
+      val e = intercept[IllegalArgumentException](GraftSession.confs(profile, Map(name -> v)))
+      assert(e.getMessage.contains(name), s"$profile $name=$v")
     }
   }
 

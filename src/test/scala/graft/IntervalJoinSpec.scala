@@ -153,20 +153,24 @@ class IntervalJoinSpec extends SparkSuite {
     }
   }
 
-  test("execution-time collect cap fails fast instead of OOMing the driver") {
+  test("execution-time collect caps fail fast instead of OOMing the driver") {
     val a = Seq((1L, 5.0)).toDF("id", "v")
     val b = (0 until 100).map(i => (i.toLong, i * 1.0, i * 1.0 + 1.0)).toDF("iid", "lo", "hi")
     withStrategy {
-      spark.conf.set("spark.graft.intervalJoin.maxBroadcastRows", "10")
-      try {
-        val joined = a.join(b, $"v" >= $"lo" && $"v" < $"hi")
-        assert(joined.queryExecution.executedPlan
-          .exists(_.isInstanceOf[BroadcastIntervalJoinExec]))
-        val e = intercept[Exception](joined.count())
-        def msgs(t: Throwable): Seq[String] =
-          Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-        assert(msgs(e).exists(_.contains("cannot broadcast")), e.toString)
-      } finally spark.conf.unset("spark.graft.intervalJoin.maxBroadcastRows")
+      for ((key, cap, msg) <- Seq(
+          ("spark.graft.intervalJoin.maxBroadcastRows", "10", "cannot broadcast 100"),
+          ("spark.graft.intervalJoin.maxBroadcastBytes", "100", "exceeds 100 bytes"))) {
+        spark.conf.set(key, cap)
+        try {
+          val joined = a.join(b, $"v" >= $"lo" && $"v" < $"hi")
+          assert(joined.queryExecution.executedPlan
+            .exists(_.isInstanceOf[BroadcastIntervalJoinExec]))
+          val e = intercept[Exception](joined.count())
+          def msgs(t: Throwable): Seq[String] =
+            Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+          assert(msgs(e).exists(_.contains(msg)), e.toString)
+        } finally spark.conf.unset(key)
+      }
     }
   }
 

@@ -139,11 +139,11 @@ class SkewGraphSpec extends SparkSuite {
       Graph.copurchaseEdges(cp, 2, hubPath = "bogus"))
   }
 
-  test("copurchaseEdges: rejects an unknown graft.copurchase.forcePath") {
+  test("copurchaseEdges: rejects an unknown spark.graft.copurchase.forcePath") {
     val s = spark
     import s.implicits._
     val cp = Seq((1L, 10L), (2L, 10L), (1L, 11L), (2L, 11L), (3L, 11L)).toDF("c", "p")
-    val key = "graft.copurchase.forcePath"
+    val key = "spark.graft.copurchase.forcePath"
     try {
       spark.conf.set(key, "prefliter")
       val e = intercept[IllegalArgumentException](Graph.copurchaseEdges(cp, 2))
