@@ -11,7 +11,9 @@ import java.nio.file.Files
 
 /** Streaming throughput/latency bench — the quantitative check of the
   * reference's one SLA: a fraud decision "within seconds" of the event
-  * (README.md:326-327) at 1-second micro-batches (FinFraudGuard.java:41).
+  * (README.md:326-327). The reference polls 1-second micro-batches
+  * (FinFraudGuard.java:41); `runFrom` starts each micro-batch as soon as
+  * the previous one commits.
   *
   * Replays the sf-dir `events` table as the transaction stream through the
   * PRODUCTION wiring — `FraudStream.runFrom` (file source → decode →
@@ -101,7 +103,6 @@ object StreamBench {
     */
   def snapDedupStats(spark: SparkSession, sfDir: String, batches: Int,
       copies: Int, parts: Int): StreamStats = {
-    import spark.implicits._
     val work = Files.createTempDirectory("graft-streamrow").toString
     val shift = 1000000000L
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{GraftQuery, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType}
+import org.apache.spark.sql.types.DecimalType
 
 /** Runtime-filter-style semi-join pruning with a deterministic Bloom
   * filter: build a bitset over the dimension's join keys, broadcast it,

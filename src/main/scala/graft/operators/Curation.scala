@@ -39,12 +39,6 @@ object Curation {
         .otherwise(array().cast("array<string>"))
   }
 
-  /** DuckDB twin of [[gramsOf]]: range() is exclusive-end and already empty
-    * when end <= start, so only the greatest() guard is needed. */
-  private def gramsSql(n: Int): String =
-    s"list_transform(range(1, greatest(len(ws) - ${n - 2}, 1)), " +
-      s"i -> array_to_string(list_slice(ws, i, i + ${n - 1}), ' '))"
-
   /** Benchmark decontamination: flag every corpus document sharing at least
     * one word `n`-gram with the benchmark set (the GPT-3-style overlap
     * check run before training). Output per non-benchmark doc:

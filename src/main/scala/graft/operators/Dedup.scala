@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{GraftQuery, Tables}
 import graft.functions.JaroWinklerMicros
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -203,7 +203,7 @@ object Dedup {
     * (__blk string, __id long, gs array<string>).
     */
   private def blockedAllPairs(docs: DataFrame, containment: Boolean,
-      maxTile: Long = MaxTileRows): DataFrame = {
+      maxTile: Long): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val sizes = docs.groupBy("__blk").agg(count(lit(1)).as("__n"))
@@ -349,7 +349,6 @@ object Dedup {
   def minHashPairs(df: DataFrame, idCol: String, textCol: String, blockCol: String,
       maxBandBucket: Option[Int] = None, maxTileRows: Long = MaxTileRows): DataFrame = {
     val s = df.sparkSession
-    import s.implicits._
     // Signatures via the native map-side MinHashSig expression (no token
     // explode/shuffle; the MinHashSketch aggregate remains the
     // token-stream form and is asserted equal in MinHashSketchSpec).

@@ -4,7 +4,7 @@ import graft.{GraftQuery, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
 
 /** Core relational operator suite, mirroring the reference's batch layer
   * (SURVEY.md §2) re-expressed over the driver's TPC-H-ish fixtures.
@@ -48,10 +48,6 @@ object Relational {
   private def roundAt(c: Column, scale: Int): Column = {
     val p = math.pow(10.0, scale)
     floor(c * lit(p) + lit(0.5)) / lit(p)
-  }
-  private def roundAtSql(e: String, scale: Int): String = {
-    val p = s"1e$scale"
-    s"floor(($e) * $p + 0.5) / $p"
   }
 
   /** Great-circle distance — see graft.functions.GeoFunctions.greatCircleKm. */

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale primitives the 100 TB deployment leans on: bucketed co-located

@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.{GraftConf, GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
@@ -71,7 +70,7 @@ object Similarity {
   private def tiledPairScan(
       prepared: DataFrame,
       kernel: (Long, Long, Array[Long], Array[(Long, Long, Array[Long])]) => Iterator[(Long, Long, Double)],
-      maxTile: Long = MaxTileRows,
+      maxTile: Long,
   ): DataFrame = tiledPairScan2(prepared, prepared, kernel, maxTile)
 
   /** A tiled scan's corpus frame, pinned once. Lazy localCheckpoint, NOT
@@ -104,7 +103,7 @@ object Similarity {
       qPrepared: DataFrame,
       cPrepared: DataFrame,
       kernel: (Long, Long, Array[Long], Array[(Long, Long, Array[Long])]) => Iterator[(Long, Long, Double)],
-      maxTile: Long = MaxTileRows,
+      maxTile: Long,
   ): DataFrame = {
     val s = cPrepared.sparkSession
     import s.implicits._
@@ -695,7 +694,7 @@ object Similarity {
       qPrepared: DataFrame, // (__bucket, __id, q: array<long>)
       cPacked: DataFrame,   // (__bucket, __id, pk: long)
       kernel: (Long, Array[Long], Array[Long], Array[Long]) => Iterator[(Long, Long, Double)],
-      maxTile: Long = MaxTileRows,
+      maxTile: Long,
   ): DataFrame = {
     val s = cPacked.sparkSession
     import s.implicits._
@@ -1126,7 +1125,7 @@ object Similarity {
       corpusVecs: org.apache.spark.sql.Dataset[(Long, Array[Long])],
       queryVecs: org.apache.spark.sql.Dataset[(Long, Array[Long])],
       k: Int, m: IvfPqModel, shortlist: Int, nprobe: Int,
-      maxTileRows: Long, probeRatio: Double = 0.0): DataFrame = {
+      maxTileRows: Long, probeRatio: Double): DataFrame = {
     require(probeRatio == 0.0 || probeRatio >= 1.0,
       s"probeRatio must be 0 (off) or >= 1, got $probeRatio")
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")

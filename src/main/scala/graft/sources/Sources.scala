@@ -1,9 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.mutable
 
 /** Readers and sinks mirroring the reference's ingest surface (SURVEY §2.1).
   *
@@ -193,25 +195,34 @@ object Sources {
     * keys (HBaseTransLink.java:64): row content is serialized as JSON with
     * nulls kept (a bare `concat_ws` silently skips null columns, so rows
     * differing only in WHICH column is null would collide), and identical
-    * duplicate rows within a batch are disambiguated by a per-content-hash
-    * row_number. That window partitions on the content hash itself — at
-    * 100 TB each hash group is a handful of duplicate rows, so no partition
-    * hotspots — and which physical copy of an identical row receives index
-    * 1 vs 2 is immaterial: the emitted rowid SET is deterministic.
+    * rows are told apart by `md5(content # partition # k)`, k counting that
+    * content's copies within the partition. Numbering inside the partitions
+    * `df` already has lets the write run in the tasks that produce the batch
+    * (for the stream, the stateful operator's) with no shuffle to co-locate
+    * the copies; the partition index keeps copies in different partitions
+    * distinct. So the same rows in the same partitions give the same rowid
+    * set (which copy gets k = 1 is immaterial). That holds for a
+    * `foreachBatch` over a stateful operator, since both state APIs
+    * hash-partition by card over the checkpoint's fixed partition count, and
+    * for local relations; one-shot batch writes use [[appendWithUuid]].
     */
   def appendMasterBatch(df: DataFrame, path: String, batchId: Long): Unit = {
-    val dataCols = df.columns.map(col)
-    // collision-proof temp name: a fixed "__content" would silently overwrite
-    // (then drop) an input column of that name, corrupting the written batch
-    val tmp = Iterator.from(0).map(i => s"__graft_content_$i")
-      .find(n => !df.columns.contains(n)).get
+    val cols = df.columns.toSeq.map(col)
+    val n = cols.length
     val content = md5(concat_ws("|", lit(batchId),
-      to_json(struct(dataCols: _*), Map("ignoreNullFields" -> "false"))))
-    val dupIdx = row_number().over(
-      Window.partitionBy(col(tmp)).orderBy(lit(1)))
-    df.withColumn(tmp, content)
-      .withColumn("rowid", md5(concat_ws("#", col(tmp), dupIdx.cast("string"))))
-      .drop(tmp)
+      to_json(struct(cols: _*), Map("ignoreNullFields" -> "false"))))
+    val withRowid = StructType(df.schema.fields :+ StructField("rowid", StringType, nullable = false))
+    df.select(cols :+ content: _*)
+      .mapPartitions { rows =>
+        val part = TaskContext.getPartitionId()
+        val copies = mutable.HashMap.empty[String, Int]
+        rows.map { r =>
+          val h = r.getString(n)
+          val k = copies.getOrElse(h, 0) + 1
+          copies(h) = k
+          Row.fromSeq(r.toSeq.take(n) :+ DigestUtils.md5Hex(s"$h#$part#$k"))
+        }
+      }(Encoders.row(withRowid))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/batch_id=$batchId")
   }
 }

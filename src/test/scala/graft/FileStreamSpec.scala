@@ -2,9 +2,20 @@ package graft
 
 import graft.model._
 import graft.streaming.FraudStream
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** The classifier behind a real readStream source (file source — the same
   * decode → classify → sink graph the Kafka wiring uses, S13/K1 without a
@@ -160,6 +171,142 @@ class FileStreamSpec extends SparkSuite {
     } finally prev match {
       case Some(p) => spark.conf.set(key, p)
       case None => spark.conf.unset(key)
+    }
+  }
+
+  /** A text file source over `inDir`, as the Kafka value column. */
+  private def textStream(inDir: String): DataFrame =
+    spark.readStream.schema(StructType(Seq(StructField("value", StringType)))).text(inDir)
+
+  private def swipe(card: Long, pos: Long, postcode: Int, ts: String): String =
+    s"""{"card_id": $card, "member_id": ${100 + card}, "amount": 10.0, "pos_id": $pos, """ +
+      s""""postcode": $postcode, "transaction_dt": "$ts"}"""
+
+  /** Writes `lines` beside `inDir` and moves the file in whole, so no
+    * micro-batch sees half of it. */
+  private def deliver(inDir: String, name: String, lines: Seq[String]): Unit = {
+    val staged = Paths.get(inDir).resolveSibling(name)
+    Files.writeString(staged, lines.mkString("", "\n", "\n"))
+    Files.move(staged, Paths.get(inDir, name), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  private val zips = Map("11111" -> (0.0, 0.0), "22222" -> (0.0, 90.0))
+  private val cards = 1L to 8L
+
+  /** Batch 0: every card swipes at home. Batch 1: every card swipes again
+    * 10 s later, card 3 from the other side of the world (FRAUD), and card
+    * 5's swipe is delivered twice, so the batch holds two identical rows. */
+  private val batch0 = cards.map(c => swipe(c, c, 11111, "01-02-2024 10:00:00"))
+  private val batch1 = {
+    val b = cards.map(c => swipe(c, 10 + c, if (c == 3) 22222 else 11111, "01-02-2024 10:00:10"))
+    b :+ b(4)
+  }
+
+  /** Runs batches 0 and 1 through runFrom, deletes the checkpoint's last
+    * commit, restarts on the same checkpoint and checks that the replayed
+    * batch 1 leaves the master exactly as the first run wrote it. */
+  private def restartReplaysMaster(stateApi: String): Unit = {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory(s"graft-restart-$stateApi").toString
+    val inDir = s"$dir/in"
+    Files.createDirectories(Paths.get(inDir))
+    val zipBc = spark.sparkContext.broadcast(zips)
+    val snapshot = cards.map(c => CardLookup(c, Some(1000.0), Some(700), None, None)).toDS()
+    def start() = FraudStream.runFrom(textStream(inDir), snapshot, zipBc,
+      masterPath = s"$dir/master", checkpoint = s"$dir/ckpt", stateApi = stateApi).start()
+    def master() = spark.read.parquet(s"$dir/master")
+      .select("rowid", "pos_id", "status").as[(String, Long, String)].collect().sorted.toSeq
+
+    val first = start()
+    try {
+      deliver(inDir, "b0.jsonl", batch0)
+      first.processAllAvailable()
+      deliver(inDir, "b1.jsonl", batch1)
+      first.processAllAvailable()
+    } finally first.stop()
+    val written = master()
+
+    // batch 1's master is written, but the checkpoint no longer records the
+    // batch as committed: a restart must replay it
+    val commits = Paths.get(s"$dir/ckpt/commits")
+    assert(Files.exists(commits.resolve("1")) && !Files.exists(commits.resolve("2")))
+    Files.delete(commits.resolve("1"))
+    Files.deleteIfExists(commits.resolve(".1.crc"))
+
+    val second = start()
+    try second.processAllAvailable() finally second.stop()
+    assert(second.recentProgress.exists(p => p.batchId == 1 && p.numInputRows == batch1.length),
+      "the restarted query did not replay batch 1")
+    val replayed = master()
+    assert(replayed == written)
+    // no duplicates: every delivered swipe has its own rowid, the twins included
+    assert(replayed.map(_._1).distinct.length == replayed.length)
+    // no gaps: one row per delivered swipe
+    assert(replayed.map(_._2).sorted == (cards ++ cards.map(10 + _) :+ 15L).sorted)
+    assert(replayed.filter(_._3 == "FRAUD").map(_._2) == Seq(13L))
+  }
+
+  test("restart over the same checkpoint replays the last batch into an identical master (fmgws)") {
+    restartReplaysMaster("fmgws")
+  }
+
+  test("restart over the same checkpoint replays the last batch into an identical master (tws)") {
+    val key = GraftSession.StateStoreProviderKey
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, GraftSession.RocksDbProvider)
+    try restartReplaysMaster("tws")
+    finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a micro-batch's master write adds no shuffle: the state operator's is the only one") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-master-plan").toString
+    val inDir = s"$dir/in"
+    Files.createDirectories(Paths.get(inDir))
+    val zipBc = spark.sparkContext.broadcast(zips)
+    val snapshot = cards.map(c => CardLookup(c, Some(1000.0), Some(700), None, None)).toDS()
+    // foreachBatch hands the write its batch as an RDD scan, so the state
+    // operator's exchange sits in that RDD's lineage, not in the write's plan
+    def lineageShuffles(rdd: RDD[_]): Seq[Int] = rdd.dependencies.toSeq.flatMap {
+      case d: ShuffleDependency[_, _, _] => d.shuffleId +: lineageShuffles(d.rdd)
+      case d => lineageShuffles(d.rdd)
+    }
+    object Plans extends AdaptiveSparkPlanHelper
+    @volatile var seen: Option[(Int, Int)] = None
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName }
+          .filter(_ == "batch_id=1").foreach { _ =>
+            val plan = qe.executedPlan
+            val exchanges = Plans.collect(plan) { case e: ShuffleExchangeExec => e }.size
+            val upstream = Plans.collect(plan) { case r: RDDScanExec => r.rdd }
+              .flatMap(lineageShuffles).distinct.size
+            seen = Some((exchanges, upstream))
+          }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    // the stream's session is cloned at start, listeners included
+    spark.listenerManager.register(listener)
+    val q = FraudStream.runFrom(textStream(inDir), snapshot, zipBc,
+      masterPath = s"$dir/master", checkpoint = s"$dir/ckpt").start()
+    try {
+      deliver(inDir, "b0.jsonl", batch0)
+      q.processAllAvailable()
+      // batch 1: the initial-state seeding of batch 0 is out of the plan
+      deliver(inDir, "b1.jsonl", batch1)
+      q.processAllAvailable()
+      eventually(timeout(30.seconds)) { assert(seen.isDefined) }
+      val (exchanges, upstream) = seen.get
+      assert(exchanges == 0, "the master write planned a shuffle of its own")
+      assert(upstream == 1, s"expected only the state operator's shuffle, got $upstream")
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(listener)
     }
   }
 }
