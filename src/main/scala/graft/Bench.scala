@@ -143,6 +143,10 @@ object Bench {
       .count()
   }
 
+  /** Timed reps per query: SPARK_GRAFT_REPS, default 2. */
+  private[graft] def reps(env: Map[String, String]): Int =
+    GraftSession.positive(env, "SPARK_GRAFT_REPS", 2, "reps", Int.MaxValue).toInt
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("bench")
@@ -202,7 +206,7 @@ object Bench {
     // shared driver box's noise (round 3 recorded a phantom 1.48× "regression"
     // spread across untouched queries; a clean local re-run was 1.0×). The min
     // is the throughput-capability number the bound cares about.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val reps = Bench.reps(sys.env)
     // (name, seconds, succeeded) per rep: a rep that crashes must be
     // EXCLUDED from the min — a fast failure would otherwise publish as the
     // query's best time and a crash would read as a speedup in the curve
@@ -212,7 +216,7 @@ object Bench {
       val ok = try { drain(fn(spark, sfDir)); true } catch { case _: Throwable => false }
       (name, (System.nanoTime() - t0) / 1e9, ok)
     }
-    val runs = (1 to math.max(1, reps)).map(_ => runOnce())
+    val runs = (1 to reps).map(_ => runOnce())
     val names = runs.head.map(_._1)
     val byName = runs.flatten.groupBy(_._1)
     val results = names.map { name =>

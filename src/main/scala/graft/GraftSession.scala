@@ -14,14 +14,10 @@ import org.apache.spark.sql.SparkSession
   *    the master and the deployer's confs
   *
   * Env vars read: SPARK_GRAFT_CPUS (bench/verify task slots and shuffle
-  * partitions), SPARK_GRAFT_OPEN_COST (bench) and GRAFT_STATE_API (job).
+  * partitions) and SPARK_GRAFT_OPEN_COST (bench).
   * Overrides may set only the `graft.` keys [[GraftConf]] declares.
   */
 object GraftSession {
-
-  val StateStoreProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Confs every profile shares: UTC (the oracle and the fixtures are UTC)
     * and the graft SQL functions. */
@@ -84,11 +80,7 @@ object GraftSession {
       case "test" =>
         local(Map.empty, 4) ++ common ++ noUi
       case "job" =>
-        // transformWithState needs the RocksDB store, and the provider is a
-        // session-wide choice, so it is made here rather than by the stream
-        // (FraudStream.runFrom checks it)
-        common ++ (if (env.get("GRAFT_STATE_API").contains("tws"))
-          Seq(StateStoreProviderKey -> RocksDbProvider) else Nil)
+        common
       case other =>
         throw new IllegalArgumentException(
           s"unknown session profile '$other' (expected bench|verify|test|job)")
@@ -96,7 +88,7 @@ object GraftSession {
 
   /** Env var `name` as a positive count of `unit` up to `max`, else
     * `default`: Spark's own parse error would not name the variable. */
-  private def positive(env: Map[String, String], name: String, default: Long,
+  private[graft] def positive(env: Map[String, String], name: String, default: Long,
       unit: String, max: Long = Long.MaxValue): String =
     env.get(name).fold(default)(v => GraftConf.parse(name, s"a positive number of $unit", v)(
       _.toLongOption.filter(n => n > 0 && n <= max))).toString

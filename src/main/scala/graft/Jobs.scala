@@ -51,6 +51,14 @@ object FraudStreamJob {
     *       <masterOutPath> <checkpointPath>
     * (first four match FinFraudGuard.java:27-37; the HBase master arg
     * becomes the snapshot/master/checkpoint paths)
+    *
+    * The card state lives in Spark's default in-heap state store, unless
+    * the deployer's confs name another. A deployment whose key space
+    * outgrows the executor heap keeps it off-heap in RocksDB with
+    * `--conf spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
+    * (BENCH_STREAM.md). A checkpoint stays on the store that wrote it: to
+    * switch, start on a fresh checkpoint seeded through
+    * `FraudStream.stateFromMaster` and `FraudBatch.mergeLookup`.
     */
   def main(args: Array[String]): Unit = {
     require(args.length == 7,
@@ -67,11 +75,8 @@ object FraudStreamJob {
         col("postcode").cast("int"), col("transaction_dt"))
       .as[CardLookup]
     val zipBc = graft.geo.Geo.broadcastZipMap(spark, zipCsv)
-    // GRAFT_STATE_API=tws selects the transformWithState path (the job
-    // profile then sets the RocksDB state store)
-    val stateApi = sys.env.getOrElse("GRAFT_STATE_API", "fmgws")
     val query = FraudStream.run(spark, broker, topic, snapshot, zipBc,
-      masterPath, checkpoint, cfg, stateApi).start()
+      masterPath, checkpoint, cfg).start()
     query.awaitTermination()
   }
 }

@@ -17,9 +17,10 @@ import java.nio.file.Files
   *
   * Replays the sf-dir `events` table as the transaction stream through the
   * PRODUCTION wiring — `FraudStream.runFrom` (file source → decode →
-  * stateful classify → foreachBatch parquet master append), either state
-  * API — or the corpus speed layer (`CorpusStream.ingest`: watermarked
-  * content dedup + quality gate → parquet sink). Inputs are pre-written
+  * stateful classify → foreachBatch parquet master append) on the state
+  * store the session names — or the corpus speed layer
+  * (`CorpusStream.ingest`: watermarked content dedup + quality gate →
+  * parquet sink). Inputs are pre-written
   * JSON-lines files; `maxFilesPerTrigger 1` makes each file one
   * micro-batch, so per-batch latency and records/sec come straight from
   * the engine's own StreamingQueryProgress (triggerExecution duration,
@@ -34,9 +35,9 @@ import java.nio.file.Files
   * starts from a fresh checkpoint over the full input.
   *
   * Usage: runMain graft.StreamBench <scenario> [sfDir] [batches] [copies] [parts]
-  *   scenario — fraud_fmgws | fraud_tws | corpus | corpus_kn | snap_dedup
+  *   scenario — fraud | corpus | corpus_kn | snap_dedup
   *              | session_agg | interval_join (EventStream event-time ops
-  *              over time-ordered input) | scale_fmgws | scale_tws
+  *              over time-ordered input) | scale
   *              (synthetic, copies = CARDS in thousands) | snap_scale
   *              (copies = snapshot blow-up factor)
   *   batches  — input files (= micro-batches) per run (default 20)
@@ -44,6 +45,10 @@ import java.nio.file.Files
   *   parts    — shuffle/state partitions for the STREAM (default 8:
   *              state partitions should track key count and batch size,
   *              not box CPUs — 32 costs ~32 store commits per batch)
+  *
+  * The fraud and scale rows on the RocksDB state store set Spark's provider
+  * as a system property, which the session reads:
+  * `JDK_JAVA_OPTIONS=-Dspark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`.
   */
 object StreamBench {
 
@@ -143,18 +148,12 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val scenario = args.headOption.getOrElse("fraud_fmgws")
+    val scenario = args.headOption.getOrElse("fraud")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val batches = if (args.length > 2) args(2).toInt else 20
     val copies = if (args.length > 3) args(3).toInt else 1
     val parts = if (args.length > 4) args(4).toInt else 8
-    // the *_tws scenarios run transformWithState, which needs the RocksDB
-    // store on the session (FraudStream.runFrom checks it)
-    val api = if (scenario.endsWith("_tws")) "tws" else "fmgws"
-    val spark = GraftSession.build("bench",
-      Seq("spark.sql.shuffle.partitions" -> parts.toString) ++
-        (if (api == "tws") Seq(GraftSession.StateStoreProviderKey -> GraftSession.RocksDbProvider)
-         else Nil))
+    val spark = GraftSession.build("bench", Seq("spark.sql.shuffle.partitions" -> parts.toString))
     import spark.implicits._
     val work = Files.createTempDirectory("graft-streambench").toString
     val shift = 1000000000L
@@ -253,14 +252,14 @@ object StreamBench {
         // standing per-round stream row.
         snapDedupStats(spark, sfDir, batches, copies, parts)
 
-      case "scale_fmgws" | "scale_tws" =>
+      case "scale" =>
         // past-the-fixture state scale (round-9): the sf0.1 replay tops out
         // at 1,500-6,000 distinct cards, so the "state is linear in keys /
         // RocksDB for past-heap" claims were asserted, not measured. This
         // scenario synthesizes `copies`-THOUSAND distinct cards (3 txns
         // each, spread round-robin across batches) through the identical
         // production wiring, with a full-coverage deploy snapshot — the
-        // 1M-card point is `scale_fmgws ... 20 1000 8`.
+        // 1M-card point is `scale ... 20 1000 8`.
         val cards = (if (args.length > 3) args(3).toLong else 1000L) * 1000L
         val txnsPer = 3L
         val txnJson = spark.range(cards * txnsPer).select(to_json(struct(
@@ -276,10 +275,7 @@ object StreamBench {
         val txnDir = s"$work/txn_in"
         txnJson.repartition(batches).write.text(txnDir)
 
-        val zip: Map[String, (Double, Double)] = (0 until 100).map { kk =>
-          kk.toString -> ((kk * 37 % 140 - 70) + 0.5, (kk * 73 % 340 - 170) + 0.25)
-        }.toMap
-        val zipBc = spark.sparkContext.broadcast(zip)
+        val zipBc = spark.sparkContext.broadcast(Relational.zipGrid)
         // full-coverage deploy snapshot: every card has a ucl+score row, as
         // a landed lookup table would at deploy time — the seed load is
         // part of what must scale with the key space
@@ -298,8 +294,8 @@ object StreamBench {
           val t0 = System.nanoTime()
           val q = FraudStream.runFrom(raw, snapshot, zipBc,
             masterPath = s"$work/master_$tag", checkpoint = s"$work/ckpt_$tag",
-            cfg = FraudConfig(), stateApi = api).start()
-          drain(q, s"scale_${api}_${cards}_$tag", nTxn, t0)
+            cfg = FraudConfig()).start()
+          drain(q, s"scale_${cards}_$tag", nTxn, t0)
         }
         runScale("warm", batches / 2)
         runScale("main", 1)
@@ -392,7 +388,7 @@ object StreamBench {
         run("warm", batches / 2) // warm-up: big files, few batches
         run("main", 1)
 
-      case "fraud_fmgws" | "fraud_tws" =>
+      case "fraud" =>
         // events → transaction JSON lines: same mapping as
         // q_stateful_classify (Stateful.scala) — user=card, value=amount,
         // payload k=postcode, day-first stream timestamp
@@ -414,10 +410,7 @@ object StreamBench {
         val txnDir = s"$work/txn_in"
         txnJson.repartition(batches).write.text(txnDir)
 
-        val zip: Map[String, (Double, Double)] = (0 until 100).map { kk =>
-          kk.toString -> ((kk * 37 % 140 - 70) + 0.5, (kk * 73 % 340 - 170) + 0.25)
-        }.toMap
-        val zipBc = spark.sparkContext.broadcast(zip)
+        val zipBc = spark.sparkContext.broadcast(Relational.zipGrid)
         val score = Tables(spark, sfDir, "customer")
           .select(col("c_custkey").as("card_id"),
             col("c_acctbal").cast(IntegerType).as("score"))
@@ -438,8 +431,8 @@ object StreamBench {
           val t0 = System.nanoTime()
           val q = FraudStream.runFrom(raw, snapshot, zipBc,
             masterPath = s"$work/master_$tag", checkpoint = s"$work/ckpt_$tag",
-            cfg = FraudConfig(), stateApi = api).start()
-          drain(q, s"fraud_${api}_$tag", nTxn, t0)
+            cfg = FraudConfig()).start()
+          drain(q, s"fraud_$tag", nTxn, t0)
         }
         run("warm", batches / 2)
         run("main", 1)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.rules.Rules
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,6 +76,12 @@ object Relational {
       .withColumn("lon", (k * 73 % 340 - 170).cast(DoubleType) + lit(0.25))
   }
 
+  /** [[withCoords]]'s grid as the zip map the streaming classifier takes:
+    * payload k = 0..99 → (lat, lon). */
+  val zipGrid: Map[String, (Double, Double)] = (0 until 100).map { k =>
+    k.toString -> ((k * 37 % 140 - 70) + 0.5, (k * 73 % 340 - 170) + 0.25)
+  }.toMap
+
   private[operators] val coordsSql =
     """SELECT *,
       |  CAST(CAST(json_extract_string(props, '$.k') AS INTEGER) * 37 % 140 - 70 AS DOUBLE) + 0.5 AS lat,
@@ -143,12 +150,7 @@ object Relational {
       .join(ucl, Seq("user_id"), "left")
       .join(broadcast(score), Seq("user_id"), "left")
       .withColumn("label",
-        when(
-          (col("score").isNotNull && col("score") < 200) ||
-            (col("ucl").isNotNull && col("value") > col("ucl")) ||
-            (col("speed_kms").isNotNull && col("speed_kms") > 0.25),
-          lit("FRAUD"),
-        ).otherwise(lit("GENUINE")))
+        Rules.fraudLabel(col("score"), col("value"), col("ucl"), col("speed_kms")))
   }
 
   // ---- queries -------------------------------------------------------------
@@ -340,8 +342,7 @@ object Relational {
         orders.join(broadcast(cust), orders("o_custkey") === cust("c_custkey"))
           .select(
             col("o_orderkey"),
-            when(col("c_acctbal") < 200, lit("Fraudulent"))
-              .otherwise(col("o_orderstatus")).as("status"),
+            Rules.scoreRelabel(col("c_acctbal"), col("o_orderstatus")).as("status"),
           )
           .orderBy("o_orderkey")
       },

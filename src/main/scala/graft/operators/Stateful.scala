@@ -117,10 +117,7 @@ object Stateful {
         ).as[Transaction]
         // zip dimension analog: every payload k is a "zip" on the same
         // deterministic grid as Relational.withCoords
-        val zip: Map[String, (Double, Double)] = (0 until 100).map { kk =>
-          kk.toString -> ((kk * 37 % 140 - 70) + 0.5, (kk * 73 % 340 - 170) + 0.25)
-        }.toMap
-        val zipBc = s.sparkContext.broadcast(zip)
+        val zipBc = s.sparkContext.broadcast(Relational.zipGrid)
         // seed state: ucl from the batch layer (last-10 stats), score from the
         // customer dimension — the EP3 dual-writer split
         val ucl = Relational.uclPerUserPublic(e)

@@ -202,8 +202,9 @@ object Sources {
     * the copies; the partition index keeps copies in different partitions
     * distinct. So the same rows in the same partitions give the same rowid
     * set (which copy gets k = 1 is immaterial). That holds for a
-    * `foreachBatch` over a stateful operator, since both state APIs
-    * hash-partition by card over the checkpoint's fixed partition count, and
+    * `foreachBatch` over a stateful operator, since the stream's state
+    * operator hash-partitions by card over the checkpoint's fixed partition
+    * count, and
     * for local relations; one-shot batch writes use [[appendWithUuid]].
     */
   def appendMasterBatch(df: DataFrame, path: String, batchId: Long): Unit = {

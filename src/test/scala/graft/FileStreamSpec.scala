@@ -57,34 +57,42 @@ class FileStreamSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("deploy path: runFrom's writer appends labeled batches to the master table") {
+  private val stateStoreKey = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs `body` with the session's state store set to `provider` (None:
+    * Spark's default), restoring the previous setting afterwards so later
+    * streaming suites keep the default store. */
+  private def onStateStore[A](provider: Option[String])(body: => A): A = {
+    val prev = spark.conf.getOption(stateStoreKey)
+    provider.foreach(spark.conf.set(stateStoreKey, _))
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(stateStoreKey, p)
+      case None => spark.conf.unset(stateStoreKey)
+    }
+  }
+
+  /** Two micro-batches through the writer the production job starts: the
+    * second is an impossible travel, so classify must see the state batch 1
+    * advanced. */
+  private def deployPathAppends(provider: Option[String]): Unit = onStateStore(provider) {
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("graft-runfrom").toString
     val inDir = s"$dir/in"
     Files.createDirectories(Paths.get(inDir))
-    val zipBc = spark.sparkContext.broadcast(Map(
-      "11111" -> (0.0, 0.0), "22222" -> (0.0, 90.0)))
+    val zipBc = spark.sparkContext.broadcast(zips)
     val snapshot = Seq(CardLookup(1L, Some(1000.0), Some(700), None, None)).toDS()
-
-    val raw = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType))))
-      .text(inDir)
     // the writer the production job starts (decode → classify → foreachBatch
     // master-append), not a test-only sink
-    val q = FraudStream.runFrom(raw, snapshot, zipBc,
+    val q = FraudStream.runFrom(textStream(inDir), snapshot, zipBc,
         masterPath = s"$dir/master", checkpoint = s"$dir/ckpt")
       .start()
     try {
-      Files.writeString(Paths.get(s"$inDir/b1.jsonl"),
-        """{"card_id": 1, "member_id": 101, "amount": 10.0, "pos_id": 1, "postcode": 11111, "transaction_dt": "01-02-2024 10:00:00"}""" + "\n")
+      Files.writeString(Paths.get(s"$inDir/b1.jsonl"), swipe(1, 1, 11111, "01-02-2024 10:00:00") + "\n")
       q.processAllAvailable()
-      // second micro-batch: impossible travel — classify must see the state
-      // advanced by batch 1 through the real writer
-      Files.writeString(Paths.get(s"$inDir/b2.jsonl"),
-        """{"card_id": 1, "member_id": 101, "amount": 10.0, "pos_id": 2, "postcode": 22222, "transaction_dt": "01-02-2024 10:00:10"}""" + "\n")
+      Files.writeString(Paths.get(s"$inDir/b2.jsonl"), swipe(1, 2, 22222, "01-02-2024 10:00:10") + "\n")
       q.processAllAvailable()
       val master = spark.read.parquet(s"$dir/master")
       val got = master.orderBy("pos_id")
@@ -97,81 +105,24 @@ class FileStreamSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("deploy path with stateApi=tws: transformWithState writer produces the same master") {
-    val s = spark
-    import s.implicits._
-    val dir = Files.createTempDirectory("graft-runfrom-tws").toString
-    val inDir = s"$dir/in"
-    Files.createDirectories(Paths.get(inDir))
-    val zipBc = spark.sparkContext.broadcast(Map(
-      "11111" -> (0.0, 0.0), "22222" -> (0.0, 90.0)))
-    val snapshot = Seq(CardLookup(1L, Some(1000.0), Some(700), None, None)).toDS()
-    val raw = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType))))
-      .text(inDir)
-    // the tws path needs the RocksDB store, which whoever owns the session
-    // sets; restore it so later streaming suites keep the default provider
-    val providerKey = GraftSession.StateStoreProviderKey
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, GraftSession.RocksDbProvider)
-    val q = FraudStream.runFrom(raw, snapshot, zipBc,
-        masterPath = s"$dir/master", checkpoint = s"$dir/ckpt", stateApi = "tws")
-      .start()
-    try {
-      Files.writeString(Paths.get(s"$inDir/b1.jsonl"),
-        """{"card_id": 1, "member_id": 101, "amount": 10.0, "pos_id": 1, "postcode": 11111, "transaction_dt": "01-02-2024 10:00:00"}""" + "\n")
-      q.processAllAvailable()
-      Files.writeString(Paths.get(s"$inDir/b2.jsonl"),
-        """{"card_id": 1, "member_id": 101, "amount": 10.0, "pos_id": 2, "postcode": 22222, "transaction_dt": "01-02-2024 10:00:10"}""" + "\n")
-      q.processAllAvailable()
-      val got = spark.read.parquet(s"$dir/master").orderBy("pos_id")
-        .select("pos_id", "status").as[(Long, String)].collect().toSeq
-      assert(got == Seq((1L, "GENUINE"), (2L, "FRAUD")))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+  test("deploy path: runFrom's writer appends labeled batches to the master table") {
+    deployPathAppends(None)
   }
 
-  test("runFrom leaves the session conf alone and rejects an unknown stateApi") {
+  test("deploy path on the RocksDB state store: runFrom's writer produces the same master") {
+    deployPathAppends(Some(rocksDb))
+  }
+
+  test("runFrom leaves the session conf alone") {
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("graft-runfrom-conf").toString
-    val zipBc = spark.sparkContext.broadcast(Map("11111" -> (0.0, 0.0)))
+    val zipBc = spark.sparkContext.broadcast(zips)
     val snapshot = Seq(CardLookup(1L, Some(1000.0), Some(700), None, None)).toDS()
-    val raw = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType))))
-      .text(dir)
-    def runFrom(api: String) = FraudStream.runFrom(raw, snapshot, zipBc,
-      masterPath = s"$dir/master", checkpoint = s"$dir/ckpt", stateApi = api)
-    val key = GraftSession.StateStoreProviderKey
-    val prev = spark.conf.getOption(key)
-    try {
-      // without the RocksDB store, tws fails fast naming the conf to set
-      spark.conf.unset(key)
-      val unset = spark.conf.getAll
-      val e = intercept[IllegalArgumentException](runFrom("tws"))
-      assert(e.getMessage.contains(key))
-      assert(spark.conf.getAll == unset)
-      // with it, building the tws writer writes nothing into the session
-      spark.conf.set(key, GraftSession.RocksDbProvider)
-      val before = spark.conf.getAll
-      runFrom("tws")
-      assert(spark.conf.getAll == before)
-      // a typo'd state API is an error, not a silent fmgws run
-      val t = intercept[IllegalArgumentException](runFrom("twz"))
-      assert(t.getMessage.contains("twz"))
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val before = spark.conf.getAll
+    FraudStream.runFrom(textStream(dir), snapshot, zipBc,
+      masterPath = s"$dir/master", checkpoint = s"$dir/ckpt")
+    assert(spark.conf.getAll == before)
   }
 
   /** A text file source over `inDir`, as the Kafka value column. */
@@ -202,21 +153,26 @@ class FileStreamSpec extends SparkSuite {
     b :+ b(4)
   }
 
-  /** Runs batches 0 and 1 through runFrom, deletes the checkpoint's last
-    * commit, restarts on the same checkpoint and checks that the replayed
-    * batch 1 leaves the master exactly as the first run wrote it. */
-  private def restartReplaysMaster(stateApi: String): Unit = {
+  /** Runs batches 0 and 1 through runFrom on the `provider` state store,
+    * deletes the checkpoint's last commit, restarts on the same checkpoint
+    * and checks that the replayed batch 1 leaves the master and the card
+    * state exactly as the first run wrote them. */
+  private def restartReplays(provider: Option[String]): Unit = onStateStore(provider) {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(s"graft-restart-$stateApi").toString
+    val dir = Files.createTempDirectory("graft-restart").toString
     val inDir = s"$dir/in"
     Files.createDirectories(Paths.get(inDir))
     val zipBc = spark.sparkContext.broadcast(zips)
     val snapshot = cards.map(c => CardLookup(c, Some(1000.0), Some(700), None, None)).toDS()
     def start() = FraudStream.runFrom(textStream(inDir), snapshot, zipBc,
-      masterPath = s"$dir/master", checkpoint = s"$dir/ckpt", stateApi = stateApi).start()
+      masterPath = s"$dir/master", checkpoint = s"$dir/ckpt").start()
     def master() = spark.read.parquet(s"$dir/master")
       .select("rowid", "pos_id", "status").as[(String, Long, String)].collect().sorted.toSeq
+    // batch 1's (card, state) rows, through Spark's state data source
+    def state() = spark.read.format("statestore").option("batchId", 1L).load(s"$dir/ckpt")
+      .select(col("key.value").as("_1"), col("value.groupState").as("_2"))
+      .as[(Long, FraudStream.CardState)].collect().sortBy(_._1).toSeq
 
     val first = start()
     try {
@@ -226,6 +182,8 @@ class FileStreamSpec extends SparkSuite {
       first.processAllAvailable()
     } finally first.stop()
     val written = master()
+    val stateWritten = state()
+    assert(stateWritten.map(_._1) == cards)
 
     // batch 1's master is written, but the checkpoint no longer records the
     // batch as committed: a restart must replay it
@@ -240,6 +198,7 @@ class FileStreamSpec extends SparkSuite {
       "the restarted query did not replay batch 1")
     val replayed = master()
     assert(replayed == written)
+    assert(state() == stateWritten)
     // no duplicates: every delivered swipe has its own rowid, the twins included
     assert(replayed.map(_._1).distinct.length == replayed.length)
     // no gaps: one row per delivered swipe
@@ -247,19 +206,12 @@ class FileStreamSpec extends SparkSuite {
     assert(replayed.filter(_._3 == "FRAUD").map(_._2) == Seq(13L))
   }
 
-  test("restart over the same checkpoint replays the last batch into an identical master (fmgws)") {
-    restartReplaysMaster("fmgws")
+  test("restart over the same checkpoint replays the last batch into an identical master and state") {
+    restartReplays(None)
   }
 
-  test("restart over the same checkpoint replays the last batch into an identical master (tws)") {
-    val key = GraftSession.StateStoreProviderKey
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, GraftSession.RocksDbProvider)
-    try restartReplaysMaster("tws")
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+  test("restart on the RocksDB state store replays the last batch into an identical master and state") {
+    restartReplays(Some(rocksDb))
   }
 
   test("a micro-batch's master write adds no shuffle: the state operator's is the only one") {

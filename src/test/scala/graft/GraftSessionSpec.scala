@@ -35,22 +35,22 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.ui.enabled" -> "false"))
   }
 
-  test("a bad SPARK_GRAFT_OPEN_COST or SPARK_GRAFT_CPUS fails with a message naming it") {
-    val bad = Seq("512k", "0", "-1", "").map("bench" -> "SPARK_GRAFT_OPEN_COST" -> _) ++
+  test("a bad SPARK_GRAFT_OPEN_COST, SPARK_GRAFT_CPUS or SPARK_GRAFT_REPS fails with a message naming it") {
+    def profile(p: String): Map[String, String] => Any = GraftSession.confs(p, _)
+    val bad = Seq("512k", "0", "-1", "").map(("bench", profile("bench"), "SPARK_GRAFT_OPEN_COST", _)) ++
       Seq("4x", "*", "0", "-2", "", "2147483648").flatMap(v =>
-        Seq("bench", "verify").map(_ -> "SPARK_GRAFT_CPUS" -> v))
-    for (((profile, name), v) <- bad) {
-      val e = intercept[IllegalArgumentException](GraftSession.confs(profile, Map(name -> v)))
-      assert(e.getMessage.contains(name), s"$profile $name=$v")
+        Seq("bench", "verify").map(p => (p, profile(p), "SPARK_GRAFT_CPUS", v))) ++
+      Seq("two", "0", "-1", "", "2147483648").map(("Bench", Bench.reps _, "SPARK_GRAFT_REPS", _))
+    for ((reader, read, name, v) <- bad) {
+      val e = intercept[IllegalArgumentException](read(Map(name -> v)))
+      assert(e.getMessage.contains(name), s"$reader $name=$v")
     }
   }
 
-  test("job leaves master and partitions to the deployer; tws selects RocksDB") {
+  test("job leaves master, partitions and the state store to the deployer") {
     val j = confs("job")
     assert(!j.contains("spark.master") && !j.contains("spark.sql.shuffle.partitions"))
-    assert(!j.contains(GraftSession.StateStoreProviderKey))
-    assert(confs("job", "GRAFT_STATE_API" -> "tws")(GraftSession.StateStoreProviderKey) ==
-      GraftSession.RocksDbProvider)
+    assert(!j.contains("spark.sql.streaming.stateStore.providerClass"))
   }
 
   test("an unknown profile is rejected") {

@@ -205,26 +205,57 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("end-to-end MemoryStream: labels across micro-batches with carried state") {
+  // Runs the two-batch MemoryStream scenario on the given state store provider
+  // (None: the session's default), restoring the session conf afterwards.
+  private def memoryStreamRun(provider: Option[String], name: String): Unit = {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[Transaction]
-    val snapshot = Seq(CardLookup(7L, Some(1000.0), Some(700), Some(11111),
-      Some("2024-01-01 10:00:00"))).toDS() // batch-format ts (FDProcBatch.txt:289)
-    val zipBc = spark.sparkContext.broadcast(zip)
-    val q = FraudStream.classify(input.toDS(), snapshot, zipBc, cfg)
-      .writeStream.format("memory").queryName("labeled").outputMode(OutputMode.Append).start()
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prevProvider = spark.conf.getOption(key)
+    provider.foreach(spark.conf.set(key, _))
     try {
-      // batch 1: genuine advance at B (slow: 1 day later), then batch 2:
-      // impossible travel back to A in 10 s of event time.
-      input.addData(txn(7, 10.0, 22222, "02-01-2024 10:00:00", 1))
-      q.processAllAvailable()
-      input.addData(txn(7, 10.0, 11111, "02-01-2024 10:00:10", 2))
-      q.processAllAvailable()
-      val got = spark.table("labeled").as[LabeledTransaction]
-        .collect().sortBy(_.pos_id).map(_.status).toSeq
-      assert(got == Seq("GENUINE", "FRAUD"))
-    } finally q.stop()
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-memstream-ckpt").toString
+      val input = MemoryStream[Transaction]
+      val snapshot = Seq(CardLookup(7L, Some(1000.0), Some(700), Some(11111),
+        Some("2024-01-01 10:00:00"))).toDS() // batch-format ts (FDProcBatch.txt:289)
+      val zipBc = spark.sparkContext.broadcast(zip)
+      val q = FraudStream.classify(input.toDS(), snapshot, zipBc, cfg)
+        .writeStream.format("memory").queryName(name).outputMode(OutputMode.Append)
+        .option("checkpointLocation", ckpt).start()
+      try {
+        // batch 1: genuine advance at B (slow: 1 day later), then batch 2:
+        // impossible travel back to A in 10 s of event time.
+        val replay = Seq(
+          txn(7, 10.0, 22222, "02-01-2024 10:00:00", 1),
+          txn(7, 10.0, 11111, "02-01-2024 10:00:10", 2))
+        input.addData(replay(0))
+        q.processAllAvailable()
+        input.addData(replay(1))
+        q.processAllAvailable()
+        val got = spark.table(name).as[LabeledTransaction]
+          .collect().sortBy(_.pos_id).map(_.status).toSeq
+        assert(got == Seq("GENUINE", "FRAUD"))
+        // the same fold in batch mode over the same replay gives identical labels
+        val ref = FraudStream.classify(replay.toDS(), snapshot, zipBc, cfg)
+          .collect().sortBy(_.pos_id).map(_.status).toSeq
+        assert(ref == got)
+      } finally q.stop()
+    } finally {
+      prevProvider match {
+        case Some(p) => spark.conf.set(key, p)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
+  test("end-to-end MemoryStream: labels across micro-batches with carried state") {
+    memoryStreamRun(None, "labeled")
+  }
+
+  test("end-to-end MemoryStream on the RocksDB state store: same labels across micro-batches") {
+    memoryStreamRun(
+      Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+      "labeled_rocksdb")
   }
 }
